@@ -1058,16 +1058,9 @@ object DedupOps {
                            centroidsDf: DataFrame, threshold: Double,
                            maxCellSize: Int = 10000): DataFrame =
     semanticDedupCore(
-      ivfAssignByJoin(df.select(col(idCol), col(vecCol)), idCol, vecCol, centroidsDf),
+      graft.ann.AnnOps.ivfAssignByJoin(df.select(col(idCol), col(vecCol)), idCol, vecCol,
+        centroidsDf),
       idCol, vecCol, threshold, maxCellSize)
-
-  /** IVF cell assignment against a centroid TABLE — forwarder to
-    * [[graft.ann.AnnOps.ivfAssignByJoin]] (moved in r15 so the table-form
-    * k-means trainer and this assignment share ONE implementation; kept here
-    * for API stability). */
-  def ivfAssignByJoin(vecs: DataFrame, idCol: String, vecCol: String,
-                      centroidsDf: DataFrame): DataFrame =
-    graft.ann.AnnOps.ivfAssignByJoin(vecs, idCol, vecCol, centroidsDf)
 
   private def semanticDedupCore(assigned: DataFrame, idCol: String,
                                 vecCol: String, threshold: Double,
@@ -1138,7 +1131,7 @@ object DedupOps {
         val dim = vecs.select(size(col(vecCol)).as("_d")).head.getInt(0)
         val centroidsDf = graft.ann.AnnOps.kmeansTrainTable(
           vecs, idCol, vecCol, initDf, dim, trainIters)
-        (ivfAssignByJoin(vecs, idCol, vecCol, centroidsDf), null, centroidsDf)
+        (graft.ann.AnnOps.ivfAssignByJoin(vecs, idCol, vecCol, centroidsDf), null, centroidsDf)
       } else {
         val init = vecs.orderBy(col(idCol)).limit(k)
           .select(col(vecCol).cast("array<double>")).collect()

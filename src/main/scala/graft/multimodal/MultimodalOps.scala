@@ -1465,11 +1465,6 @@ object MultimodalOps {
     })
   }
 
-  /** Pre-r7 name for [[resize]] (the image path is no longer a stub). */
-  @deprecated("use resize", "r7")
-  def resizeStub(ds: Dataset[MediaRow], stride: Int)
-                (implicit spark: SparkSession): Dataset[MediaRow] = resize(ds, stride)
-
   /** DataFrame-level entry: attach byte features to any (id, binary) pair without the
     * typed API -- for SQL-facing pipelines. */
   def withByteFeatures(df: DataFrame, idCol: String, binCol: String)

@@ -76,9 +76,9 @@ object StationStatus {
     * family (pull → clean → qaqc → merge).
     *
     * `files` is the object listing of the raw prefix (full paths); a data file
-    * is `<prefix>/<ISD-ID>-<YYYY>.gz` — station id and year parse positionally
-    * (basename minus ".gz" minus the last 5 chars, exactly the reference's
-    * `file[0:-5]` slice), non-`.gz` rows (station lists, reports) are ignored.
+    * is `<prefix>/<ISD-ID>-<YYYY>.gz` — the station id is the basename before
+    * `-<YYYY>.gz` (the reference's `file[0:-5]` slice); rows not named
+    * `<id>-<YYYY>.gz` (station lists, reports) are ignored.
     * `WBAN` is zero-padded to 5 (`:522-524`); the reference's
     * drop-the-index-column fixup is a pandas artifact with no Spark analog.
     *
@@ -125,16 +125,17 @@ object StationStatus {
           .as("file_name"))
   }
 
-  /** Parse the raw-prefix object listing into (sid, fyear) rows — basename,
-    * `.gz` only, id and year split positionally. */
+  /** Parse the raw-prefix object listing into (sid, fyear) rows; names other
+    * than `<id>-<YYYY>.gz` are skipped. The `when` keeps the ANSI cast off them
+    * even where the optimizer folds a literal row's projection before the filter. */
   private def pullInventory(files: DataFrame): DataFrame = {
     val name = substring_index(col("file"), "/", -1)
+    val year = regexp_extract(name, "-(\\d{4})\\.gz$", 1)
     files
-      .filter(name.endsWith(".gz"))
-      .withColumn("_base", regexp_replace(name, "\\.gz$", ""))
+      .filter(year =!= "")
       .select(
-        expr("substring(_base, 1, length(_base) - 5)").as("sid"),
-        substring(col("_base"), -4, 4).cast("int").as("fyear"))
+        regexp_extract(name, "^(.*)-\\d{4}\\.gz$", 1).as("sid"),
+        when(year =!= "", year.cast("int")).as("fyear"))
   }
 
   private def stageUpdate(stations: DataFrame, passed: DataFrame, errors: DataFrame,

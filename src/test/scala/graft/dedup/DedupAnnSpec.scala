@@ -550,7 +550,7 @@ class DedupAnnSpec extends SparkSpec {
     // assignment parity directly, including ties-to-higher-cid determinism
     val aLit = df.select(col("vid"),
       AnnOps.ivfAssign(col("v"), cents).as("_cell"))
-    val aTab = DedupOps.ivfAssignByJoin(df, "vid", "v", centsDf).select("vid", "_cell")
+    val aTab = AnnOps.ivfAssignByJoin(df, "vid", "v", centsDf).select("vid", "_cell")
     assert(aLit.exceptAll(aTab).count() == 0 && aTab.exceptAll(aLit).count() == 0)
     // auto: forcing the table path (tableAssignK = 1 < k) keeps output identical
     // to the literal path (tableAssignK huge)

@@ -109,9 +109,11 @@ class StationStatusSpec extends SparkSpec {
       "1_raw_wx/ISD/722950-23174-1982.gz",
       "1_raw_wx/ISD/722950-23174-1983.gz", // complete
       "1_raw_wx/ISD/700001-00001-1979.gz", // outside the (empty) window
-      "1_raw_wx/ISD/isd-history-stations.csv", // junk: not .gz
+      "1_raw_wx/ISD/745090-23188-19x0.gz", // junk under ANSI: non-numeric year
       "1_raw_wx/ISD/report-2020.txt"
     ).toDF("file")
+      // junk: not .gz, and a literal row the optimizer constant-folds (s23's shape)
+      .union(spark.range(1).select(lit("1_raw_wx/ISD/isd-history-stations.csv").as("file")))
     val missed = StationStatus.pullMissedStations(stations, files)
       .select("isd_id", "wban").as[(String, String)].collect().toSet
     // WBAN zero-pads to 5

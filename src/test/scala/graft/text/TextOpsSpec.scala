@@ -361,6 +361,19 @@ class TextOpsSpec extends SparkSpec {
     assert(!out.map(_.getLong(1)).contains(3L))
   }
 
+  test("bm25Retrieve rejects k1/b outside the range its decimal(8,6) bound assumes") {
+    import spark.implicits._
+    val docs = Seq((1L, "alpha beta")).toDF("id", "text")
+    val qs = Seq((10L, "alpha")).toDF("qid", "qtext")
+    for ((k1, b) <- Seq((1.2, 1.5), (1.2, -0.1), (-0.5, 0.75)))
+      intercept[IllegalArgumentException] {
+        TextOps.bm25Retrieve(docs, "id", "text", qs, "qid", "qtext", k1 = k1, b = b)
+      }
+    // both ends of the b range stay accepted
+    for (b <- Seq(0.0, 1.0))
+      assert(TextOps.bm25Retrieve(docs, "id", "text", qs, "qid", "qtext", b = b).count() == 1)
+  }
+
   test("bm25Retrieve plan: query sides broadcast; corpus crosses one wide shuffle") {
     import spark.implicits._
     val docs = (1 to 50).map(i => (i.toLong, s"alpha beta word$i tail")).toDF("id", "text")
