@@ -1378,7 +1378,15 @@ object MultimodalOps {
     * as a `window_rms IS NOT NULL` filter). Callers explode `frames` to
     * recover the videoGrayRasters row shape; both downstream channels are
     * bit-identical because every decode call and kernel is shared — only the
-    * number of container walks changes (2 → 1). */
+    * number of container walks changes (2 → 1).
+    *
+    * Memory is bounded PER VIDEO, not per frame: one output row holds all of a
+    * video's kept rasters (⌈frames/stride⌉ × hashW·hashH ints) plus its window-RMS
+    * array (⌈PCM samples/windowSamples⌉ doubles), and building it holds the
+    * payload, its split frame list and the decoded PCM track (8 bytes per sample)
+    * at once. That is fine for clips; for long videos (hours at 30 fps) raise
+    * `stride`, or take the rasters from [[videoGrayRasters]], whose rows stream
+    * one frame at a time ([[videoAudioFeatures]] decodes the whole track too). */
   def videoAvRasters(ds: Dataset[MediaRow], stride: Int = 1,
                      hashW: Int = 8, hashH: Int = 8, windowSamples: Int = 256)
                     (implicit spark: SparkSession): DataFrame = {

@@ -14,48 +14,79 @@ import org.apache.spark.sql.functions._
 object StreakOps {
 
   /** W3 — straight (consecutive) repeat streaks, flag 28 (`consecutive_repeats`,
-    * `qaqc_unusual_streaks.py:573-670`). Full semantics:
-    *  - non-null values only; `minValue` (wind/precip) drops small values BEFORE streak
-    *    grouping;
+    * `qaqc_unusual_streaks.py:573-670`), as a masked-series core: every input row
+    * comes back with a boolean `out`, true where the row is a member of a flagged
+    * streak. Rows outside `inSeries` (null counts as false) are treated as absent.
+    * Full semantics over the series:
+    *  - non-null values only; `minValue` (wind/precip) drops values ≤ `minValue` BEFORE
+    *    streak grouping;
     *  - a streak = consecutive equal values (RLE over the filtered series);
     *  - candidate when length ≥ `minSeqLen` (reference hardcodes 10) AND
     *    (length > `nValues` OR floor(span-in-days) > `nDays`);
     *  - spurious-streak suppression: rows of the streak must be adjacent in the
-    *    PRE-minValue-filter valid series (`is_consecutive` — a min_value hole inside a
-    *    run disqualifies it), enforced via a row_number taken before the filter.
-    * Returns the NON-NULL (and, when `minValue` is set, above-`minValue`) input rows
-    * with a boolean `out` column (true = member of a flagged streak); dropped rows are
-    * not returned — callers that need full-row preservation join the flag back onto
-    * the input on (keys, time), as QaqcPipeline does. */
+    *    PRE-minValue-filter series (`is_consecutive` — a min_value hole inside a run
+    *    disqualifies it).
+    *
+    * Window budget: two window levels under one sort on (keys, time). Level 1 reads
+    * the neighbouring filtered values (`lag`/`lead` with `ignoreNulls` over the masked
+    * value) and running counts of both series; a run starts (ends) where the previous
+    * (next) value differs. Level 2 carries each run's start (a running `last` of the
+    * start rows) and end (the next end row) to every member, so length, span and
+    * adjacency need no group-by and no join back.
+    *
+    * Precondition: the input is unique on (keys, time) — P10 `dedupKeepFirst` runs
+    * first in the pipeline. With duplicate keys the row order inside a tie is undefined,
+    * and only the copy that lands in the series is flagged. */
+  def straightRepeatFlags(df: DataFrame, keys: Seq[String], timeCol: String,
+                          valueCol: String, inSeries: Column, nValues: Long, nDays: Long,
+                          minValue: Option[Double] = None, minSeqLen: Long = 10,
+                          out: String = "straight_streak"): DataFrame =
+    straightCore(df, keys, timeCol, valueCol, inSeries, nValues, nDays, minValue,
+      minSeqLen, out).drop("_s1")
+
+  /** The non-null (and, when `minValue` is set, above-`minValue`) rows of `df`, each
+    * with the boolean `out`: [[straightRepeatFlags]] over all rows. */
   def straightRepeats(df: DataFrame, keys: Seq[String], timeCol: String, valueCol: String,
                       nValues: Long, nDays: Long, minValue: Option[Double] = None,
-                      minSeqLen: Long = 10, out: String = "straight_streak"): DataFrame = {
-    val kc = keys.map(col)
+                      minSeqLen: Long = 10, out: String = "straight_streak"): DataFrame =
+    straightCore(df, keys, timeCol, valueCol, lit(true), nValues, nDays, minValue,
+      minSeqLen, out).filter(col("_s1")).drop("_s1")
+
+  /** [[straightRepeatFlags]] plus `_s1`: whether the row is in the filtered series. */
+  private def straightCore(df: DataFrame, keys: Seq[String], timeCol: String,
+                           valueCol: String, inSeries: Column, nValues: Long, nDays: Long,
+                           minValue: Option[Double], minSeqLen: Long,
+                           out: String): DataFrame = {
     val v = col(valueCol)
-    val wAll = Window.partitionBy(kc: _*).orderBy(col(timeCol))
-    val valid = df.filter(v.isNotNull).withColumn("_rn", row_number().over(wAll))
-    val filtered = minValue match {
-      case Some(m) => valid.filter(v > m)
-      case None => valid
-    }
-    val wf = Window.partitionBy(kc: _*).orderBy(col(timeCol))
-    val changed = when(lag(v, 1).over(wf).isNull || lag(v, 1).over(wf) =!= v, 1).otherwise(0)
-    val withSid = filtered.withColumn("_sid",
-      sum(changed).over(wf.rowsBetween(Window.unboundedPreceding, 0)))
-    val gk = kc :+ col("_sid")
-    val streaks = withSid.groupBy(gk: _*).agg(
-      count(lit(1)).as("_len"),
-      min(col(timeCol)).as("_t0"), max(col(timeCol)).as("_t1"),
-      min(col("_rn")).as("_r0"), max(col("_rn")).as("_r1"))
-    val bad = streaks.filter(
-      col("_len") >= minSeqLen &&
-        (col("_len") > nValues ||
-          floor((col("_t1").cast("double") - col("_t0").cast("double")) / 86400.0) > nDays) &&
-        (col("_r1") - col("_r0") + 1 === col("_len")))
-      .select((gk :+ lit(true).as("_bad")): _*)
-    withSid.join(bad, keys :+ "_sid", "left")
-      .withColumn(out, coalesce(col("_bad"), lit(false)))
-      .drop("_sid", "_rn", "_bad")
+    val t = col(timeCol)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(t)
+    val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val s0 = coalesce(inSeries, lit(false)) && v.isNotNull
+    val masked = df.withColumn("_s0", s0)
+      .withColumn("_s1", minValue.fold(col("_s0"))(m => col("_s0") && v > m))
+
+    // level 1: neighbouring filtered values and the running positions in both series
+    val mv = when(col("_s1"), v)
+    val level1 = masked.select(col("*"),
+      lag(mv, 1, null, ignoreNulls = true).over(w).as("_pv"),
+      lead(mv, 1, null, ignoreNulls = true).over(w).as("_nv"),
+      count(when(col("_s0"), 1)).over(upTo).as("_r0"),
+      count(when(col("_s1"), 1)).over(upTo).as("_r1"))
+    def edge(nbr: String): Column = col("_s1") && (col(nbr).isNull || col(nbr) =!= v)
+    val pos = struct(t.as("t"), col("_r0").as("r0"), col("_r1").as("r1"))
+
+    // level 2: the run's first and last row, carried to every member
+    val endRow = when(edge("_nv"), pos)
+    val level2 = level1.select(col("*"),
+      last(when(edge("_pv"), pos), ignoreNulls = true).over(upTo).as("_st"),
+      coalesce(endRow, lead(endRow, 1, null, ignoreNulls = true).over(w)).as("_en"))
+
+    val len = col("_en.r1") - col("_st.r1") + 1
+    val spanDays = floor((col("_en.t").cast("double") - col("_st.t").cast("double")) / 86400.0)
+    level2.withColumn(out, col("_s1") && len >= minSeqLen &&
+        (len > nValues || spanDays > nDays) &&
+        col("_en.r0") - col("_st.r0") + 1 === len)
+      .drop("_s0", "_pv", "_nv", "_r0", "_r1", "_st", "_en")
   }
 
   /** W3 composed — straight repeats with thresholds resolved from the reference's

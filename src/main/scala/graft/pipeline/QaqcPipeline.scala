@@ -1,7 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.core.{Flags, Lookups}
 import graft.ops._
@@ -13,37 +16,25 @@ import graft.ops._
   * predicate (`grab_valid_obs`, `qaqc_utils.py:326-378`), so stages compose as an
   * explicit `Seq[Stage]` fold — no reordering freedom — with each stage declaring the
   * flag codes it writes. The whole pipeline stays ONE lazy Spark plan: every stage is
-  * expressions/windows/joins over the same `(station, time)`-keyed DataFrame, so
-  * Catalyst sees end-to-end column lineage and the station shuffle is reused across
-  * stages.
+  * expressions and windows over the same `(station, time)`-keyed DataFrame (the
+  * optional buoy stage adds broadcast lookups of tiny tables), so Catalyst sees
+  * end-to-end column lineage, the station shuffle is reused across stages, and no
+  * stage joins its input back onto itself — nothing is pinned, nothing is cached.
   *
   * The reference's per-station SLURM process becomes `Window.partitionBy(station)`;
   * its hard station-abort gates (P4/P5) become semi-join filters.
   */
 object QaqcPipeline {
 
-  /** One pipeline stage: a named DataFrame transform declaring the flags it writes.
-    * `pin = true` marks a stage whose transform references its input MORE THAN ONCE
-    * (aggregate + join-back self-references); [[run]] persists the input ahead of such
-    * stages. Without the pin, every self-referencing stage doubles the upstream plan
-    * tree — a 4-stage pipeline was measured re-scanning the source parquet 36x. */
-  final case class Stage(name: String, writesFlags: Seq[Int],
-                         transform: DataFrame => DataFrame, pin: Boolean = false)
+  /** One pipeline stage: a named DataFrame transform declaring the flags it writes. */
+  final case class Stage(name: String, writesFlags: Seq[Int], transform: DataFrame => DataFrame)
 
-  /** Fold the stages over `df`. Inputs of `pin` stages are persisted
-    * (MEMORY_AND_DISK — spills, never OOMs), which bounds plan-tree growth: each
-    * self-join reads the pinned intermediate instead of recomputing the full lineage.
-    * Pins are NOT eagerly materialized or unpersisted here — the first action fills
-    * them and the caller (or session teardown) releases them; at production scale
-    * replace pins with parquet checkpoints between stage groups, mirroring the
+  /** Fold the stages over `df`. The result is one lazy plan: no stage joins its input
+    * back onto itself, so nothing is persisted and no cache outlives the caller's
+    * action. At production scale, checkpoint between stage groups, mirroring the
     * reference's per-stage zarr materialization (`QAQC_pipeline.py:345-368`). */
   def run(df: DataFrame, stages: Seq[Stage]): DataFrame =
-    stages.foldLeft(df) { (d, s) =>
-      val in = if (s.pin)
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else d
-      s.transform(in)
-    }
+    stages.foldLeft(df)((d, s) => s.transform(d))
 
   /** The canonical single-variable pipeline over an obs table
     * `(station, time, v, v_eraqc)` — the reference's Part 1b → Part 2 → Part 3 order
@@ -56,40 +47,26 @@ object QaqcPipeline {
                      streakNValues: Long = 20, streakNDays: Long = 7,
                      streakMinSeqLen: Long = 10): Seq[Stage] = {
     val flag = v + "_eraqc"
+    // each check sees (and skips) rows flagged by the checks before it
+    val inSeries = CleanOps.validObs(col(flag)) && col(v).isNotNull
     Seq(
       Stage("world_record", Seq(Flags.WorldRecord),
         df => CleanOps.flagOutOfBounds(df, v, flag, lo, hi)),
       Stage("negative_values", Seq(Flags.NegativePrecip),
         df => LogicOps.flagNegative(df, v, flag)),
-      Stage("spikes", Seq(Flags.Spike), pin = true, transform = { df =>
-        val valid = df.filter(CleanOps.validObs(col(flag)) && col(v).isNotNull)
-        // rename the derived side before the self-join: same-lineage column references
-        // would otherwise resolve ambiguously and the join would never match
-        val spikes = SpikeOps.detectSpikes(valid, Seq(station), timeCol, v,
-            iqrThresh = spikeIqrThresh)
-          .filter(col("spike"))
-          .select(col(station).as("_sp_k"), col(timeCol).as("_sp_t"))
-        df.join(spikes,
-            col(station) === col("_sp_k") && col(timeCol) === col("_sp_t"), "left")
-          .withColumn(flag,
-            when(col("_sp_t").isNotNull && CleanOps.validObs(col(flag)),
-              lit(Flags.Spike).cast("int")).otherwise(col(flag)))
-          .drop("_sp_k", "_sp_t")
-      }),
-      Stage("straight_streaks", Seq(Flags.StraightStreak), pin = true, transform = { df =>
-        val valid = df.filter(CleanOps.validObs(col(flag)) && col(v).isNotNull)
-        val streaks = StreakOps.straightRepeats(valid, Seq(station), timeCol, v,
-            nValues = streakNValues, nDays = streakNDays, minSeqLen = streakMinSeqLen)
-          .filter(col("straight_streak"))
-          .select(col(station).as("_st_k"), col(timeCol).as("_st_t"))
-        df.join(streaks,
-            col(station) === col("_st_k") && col(timeCol) === col("_st_t"), "left")
-          .withColumn(flag,
-            when(col("_st_t").isNotNull && CleanOps.validObs(col(flag)),
-              lit(Flags.StraightStreak).cast("int")).otherwise(col(flag)))
-          .drop("_st_k", "_st_t")
-      }))
+      Stage("spikes", Seq(Flags.Spike), df =>
+        stamp(SpikeOps.spikeFlags(df, Seq(station), timeCol, v, inSeries,
+          iqrThresh = spikeIqrThresh, out = "_hit"), flag, Flags.Spike)),
+      Stage("straight_streaks", Seq(Flags.StraightStreak), df =>
+        stamp(StreakOps.straightRepeatFlags(df, Seq(station), timeCol, v, inSeries,
+          nValues = streakNValues, nDays = streakNDays, minSeqLen = streakMinSeqLen,
+          out = "_hit"), flag, Flags.StraightStreak)))
   }
+
+  /** Write `code` into `flag` on the rows whose `_hit` is true (hits are always valid
+    * observations: the masked cores only flag rows of their series). */
+  private def stamp(df: DataFrame, flag: String, code: Int): DataFrame =
+    df.withColumn(flag, when(col("_hit"), lit(code)).otherwise(col(flag))).drop("_hit")
 
   /** Part 1b sensor-height gates (flags 6–9) as an optional LEADING stage. OFF by
     * default everywhere: the reference defines both checks but leaves them out of
@@ -121,31 +98,21 @@ object QaqcPipeline {
     })
 
   /** A10 report off the pipeline output: flag value counts per variable, including the
-    * `no_flag` and `total_obs_count` rows (`merge_eraqc_counts.py:22-84`). */
+    * `no_flag` and `total_obs_count` rows (`merge_eraqc_counts.py:22-84`). Eager: the
+    * call runs `df` once and returns the report as a local DataFrame. */
   def flagCountReport(df: DataFrame, flagColName: String): DataFrame = {
-    // r15 optimization round: the total derives from the aggregated counts,
-    // NOT a second pass over `df` — every row lands in exactly one coalesced
-    // flag group, so sum(cnt) IS count(*) (the rule
-    // [[flagCountReportByStation]] already followed). The counts table is
-    // PERSISTED because the union references it twice (its own rows + the
-    // total), and unpinned each reference re-evaluates the caller's whole
-    // upstream — in pipe1 that was the QAQC chain's unpinned stage-4 tail
-    // running twice. The cache is flag-cardinality (tiny at any corpus
-    // size); the bench harness clearCache releases it, library callers
-    // unpersist. coalesce keeps the empty-input total at 0 (and the column
-    // non-nullable), exactly as count() was.
-    val counted = df
-      .withColumn("flag", coalesce(col(flagColName).cast("string"), lit("no_flag")))
-      .groupBy(col("flag")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager population (the mm10 lesson): the union's two branches are
-    // independent AQE stages submitted concurrently — a lazy cache would let
-    // both re-run the upstream; one count() pins it with one pass
-    counted.count()
-    val total = counted.agg(coalesce(sum(col("cnt")), lit(0L)).as("cnt"))
-      .withColumn("flag", lit("total_obs_count"))
-      .select(col("flag"), col("cnt"))
-    counted.unionByName(total)
+    // the total derives from the flag-level counts, NOT a second pass over `df`: every
+    // row lands in exactly one coalesced flag group, so sum(cnt) IS count(*). The
+    // counts (flag-cardinality: a few dozen rows at most) are collected once, so the
+    // caller's upstream runs once and no cache is left behind.
+    val counts = df
+      .groupBy(coalesce(col(flagColName).cast("string"), lit("no_flag")).as("flag"))
+      .agg(count(lit(1)).as("cnt"))
+      .collect().toSeq
+    val total = Row("total_obs_count", counts.map(_.getLong(1)).sum)
+    val schema = StructType(Seq(StructField("flag", StringType, nullable = false),
+      StructField("cnt", LongType, nullable = false)))
+    df.sparkSession.createDataFrame((counts :+ total).asJava, schema)
   }
 
   /** A10 hourly variant: comma-joined flag strings are exploded first

@@ -101,4 +101,12 @@ class LogicPipelineSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got("11") == 1 && got("no_flag") == 2 && got("total_obs_count") == 3)
   }
+
+  test("flagCountReport on empty input: one total row of 0, non-nullable columns") {
+    val df = Seq.empty[(Int, Option[Int])].toDF("id", "f")
+    val got = QaqcPipeline.flagCountReport(df, "f")
+    assert(got.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq ==
+      Seq("total_obs_count" -> 0L))
+    assert(got.schema.fields.forall(!_.nullable), got.schema.treeString)
+  }
 }

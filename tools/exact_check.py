@@ -3,7 +3,7 @@
 
 Thin wrapper so the compare logic lives in one place; any fix to
 oracle_check.canon()/loading applies to both tolerance levels automatically.
-Usage: python3 tools/exact_check.py <verify_out_dir> <sf_dir>
+Usage: python3 tools/exact_check.py <verify_out_dir> <sf_dir> [q1,q2,...]
 """
 import sys, pathlib, importlib.util, unittest.mock
 import pandas as pd
@@ -19,4 +19,5 @@ def _exact(left, right, **kw):
     return _orig(left, right, **kw)
 with unittest.mock.patch.object(pd.testing, "assert_frame_equal", _exact):
     spec.loader.exec_module(oc)   # module captures pd.testing at import? no — call main inside
-    sys.exit(oc.main(sys.argv[1], sys.argv[2]))
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
+    sys.exit(oc.main(sys.argv[1], sys.argv[2], only))

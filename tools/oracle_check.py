@@ -2,7 +2,11 @@
 """Local dev harness (driver-side tooling, NOT part of the library): mimic the
 driver's DuckDB-oracle compare over a Verify output dir.
 
-Usage: python3 tools/oracle_check.py /tmp/verify_out /root/testdata/sf0.01
+Usage: python3 tools/oracle_check.py <verify_out_dir> <sf_dir> [q1,q2,...]
+
+The optional third argument is the comma-separated query list that was passed
+to `graft.Verify` as its third argument: only those queries are checked, and
+each of them must have Spark output.
 """
 import sys, json, glob, os
 import duckdb
@@ -21,7 +25,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = pd.to_datetime(df[c])
     return df.sort_values(by=list(df.columns), ignore_index=True)
 
-def main(outdir, sfdir):
+def main(outdir, sfdir, only=None):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
@@ -29,6 +33,10 @@ def main(outdir, sfdir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    if only is not None:
+        for name in sorted(only - oracle.keys()):
+            print(f"FAIL {name}: no oracle sql"); n_fail += 1
+        oracle = {k: v for k, v in oracle.items() if k in only}
     for name, sql in sorted(oracle.items()):
         spark_dir = f"{outdir}/{name}"
         if not os.path.isdir(spark_dir):
@@ -71,4 +79,5 @@ def main(outdir, sfdir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
+    sys.exit(main(sys.argv[1], sys.argv[2], only))
